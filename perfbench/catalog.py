@@ -117,7 +117,10 @@ def duckdb_hashes(sf_dir: str, names: list[str], threads: int) -> dict[str, str]
     if os.path.exists(cache):
         with open(cache) as fh:
             return json.load(fh)
-    con = duckdb.connect(config={"threads": threads, "memory_limit": "2GB"})
+    con = duckdb.connect(config={
+        "threads": threads, "memory_limit": "2GB",
+        "temp_directory": os.path.join(os.path.dirname(sf_dir), "duckdb-tmp"),
+    })
     try:
         for table in catalog_data.TABLES:
             con.sql(f"CREATE VIEW {table} AS SELECT * FROM "

@@ -180,16 +180,18 @@ def main(argv: list[str] | None = None) -> int:
     work = os.path.join(ROOT, ".perfbench_work", f"{args.workload}-{os.getpid()}")
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp)
-    # Everything Spark, the JVM and Python write goes under the work dir.  The
-    # benchmark's own System.gc() calls (measure.collect_garbage) run as a
-    # concurrent cycle, not a full collection that also shrinks the heap.
+    # Everything Spark, the JVM and Python write goes under the work dir (no
+    # JVM perf-data file in the system temp dir).  The benchmark's own
+    # System.gc() calls (measure.collect_garbage) run as a concurrent cycle,
+    # not a full collection that also shrinks the heap.
     os.environ.update({
         "SPARK_GRAFT_CPUS": str(cpus),
         "SPARK_LOCAL_DIRS": os.path.join(work, "spark-local"),
         "SPARK_DRIVER_MEMORY": "4g",
         "PYSPARK_PYTHON": sys.executable,
         "PYSPARK_SUBMIT_ARGS": (
-            f"--driver-java-options \"-Djava.io.tmpdir={tmp} -XX:+ExplicitGCInvokesConcurrent\" "
+            f"--driver-java-options \"-Djava.io.tmpdir={tmp} -XX:-UsePerfData "
+            "-XX:+ExplicitGCInvokesConcurrent\" "
             "--conf spark.ui.showConsoleProgress=false "
             f"--conf spark.sql.warehouse.dir={os.path.join(work, 'warehouse')} "
             "--conf spark.sql.streaming.numRecentProgressUpdates=1000 "
