@@ -9,8 +9,9 @@ write, which materialises every column of the result; ``count()`` would
 let Catalyst prune unused columns.
 
 Correctness: each oracled query's row-set hash must equal DuckDB's over
-the same files (computed untimed, after the measured passes); the others
-must return the row count recorded for the data seed.
+the same files (computed untimed after the measured passes, and cached in
+the checkout because the tables are fixed); the others must return the
+row count recorded for the data seed.
 """
 
 from __future__ import annotations

@@ -15,6 +15,8 @@ import threading
 import time
 from contextlib import contextmanager
 
+from py4j.protocol import Py4JJavaError
+
 
 class Tracer:
     """Spans ``(name, start, end, parent)`` kept in memory.
@@ -95,17 +97,10 @@ def median(values, default: float = 0.0) -> float:
     return float(statistics.median(values)) if values else default
 
 
-def percentile(values, q: float, weights=None) -> float:
-    """Nearest-rank percentile (q in 0..100) of a non-empty sequence; with
-    *weights*, each value stands for that many samples."""
-    pairs = sorted(zip(values, weights if weights is not None else [1] * len(values)))
-    rank = q / 100.0 * sum(w for _, w in pairs)
-    seen = 0
-    for value, w in pairs:
-        seen += w
-        if seen >= rank:
-            return float(value)
-    return float(pairs[-1][0])
+def percentile(values, q: float) -> float:
+    """Nearest-rank percentile (q in 0..100) of a non-empty sequence."""
+    ordered = sorted(values)
+    return float(ordered[max(0, math.ceil(q / 100.0 * len(ordered)) - 1)])
 
 
 def geomean(values) -> float:
@@ -142,7 +137,7 @@ def job_group_stats(spark, group: str) -> dict[str, float]:
             seen.add(stage_id)
             try:
                 st = store.lastStageAttempt(stage_id)
-            except Exception:  # noqa: BLE001 - skipped stages have no attempt
+            except Py4JJavaError:  # a skipped stage has no attempt
                 continue
             out["tasks"] += st.numCompleteTasks()
             out["executor_run_s"] += st.executorRunTime() / 1000.0
