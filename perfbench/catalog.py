@@ -219,6 +219,7 @@ def catalog(run) -> None:
     })
 
     oracled = [n for n in QUERIES if SPECS[n].oracle is not None and n in results]
+    run.sampler.stop()  # DuckDB runs in this process: keep it out of peak_rss_mb
     with run.tracer.span("oracle.duckdb"):
         expected = duckdb_hashes(sf_dir, oracled, run.cpus)
     for name in QUERIES:

@@ -86,9 +86,11 @@ class RssSampler:
         return self
 
     def stop(self) -> float:
-        self._stop.set()
-        self._thread.join(timeout=5)
-        self.sample()
+        """Ends sampling (a second call changes nothing); returns the peak."""
+        if not self._stop.is_set():
+            self._stop.set()
+            self._thread.join(timeout=5)
+            self.sample()
         return self.peak_mb
 
 

@@ -74,10 +74,10 @@ class Run:
     """What one workload run measures and checks."""
 
     def __init__(self, work: str, seed: int, seconds: float,
-                 tracer: measure.Tracer, cpus: int):
+                 tracer: measure.Tracer, cpus: int, sampler: measure.RssSampler):
         self.spark = None
         self.work, self.seed, self.seconds = work, seed, seconds
-        self.tracer, self.cpus = tracer, cpus
+        self.tracer, self.cpus, self.sampler = tracer, cpus, sampler
         self.metrics: dict[str, float] = {}
         self.layers: dict[str, float] = {}
         self.trace_extra: dict = {}
@@ -181,16 +181,17 @@ def main(argv: list[str] | None = None) -> int:
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp)
     # Everything Spark, the JVM and Python write goes under the work dir (no
-    # JVM perf-data file in the system temp dir).  The benchmark's own
-    # System.gc() calls (measure.collect_garbage) run as a concurrent cycle,
-    # not a full collection that also shrinks the heap.
+    # JVM perf-data file in the system temp dir).  The heap starts at its full
+    # size, so peak RSS does not depend on when the JVM chose to grow it, and
+    # the benchmark's own System.gc() calls (measure.collect_garbage) run as
+    # a concurrent cycle, not a full collection that also shrinks the heap.
     os.environ.update({
         "SPARK_GRAFT_CPUS": str(cpus),
         "SPARK_LOCAL_DIRS": os.path.join(work, "spark-local"),
         "SPARK_DRIVER_MEMORY": "4g",
         "PYSPARK_PYTHON": sys.executable,
         "PYSPARK_SUBMIT_ARGS": (
-            f"--driver-java-options \"-Djava.io.tmpdir={tmp} -XX:-UsePerfData "
+            f"--driver-java-options \"-Djava.io.tmpdir={tmp} -XX:-UsePerfData -Xms4g "
             "-XX:+ExplicitGCInvokesConcurrent\" "
             "--conf spark.ui.showConsoleProgress=false "
             f"--conf spark.sql.warehouse.dir={os.path.join(work, 'warehouse')} "
@@ -202,7 +203,7 @@ def main(argv: list[str] | None = None) -> int:
     time.tzset()
     sampler = measure.RssSampler().start()
     tracer = measure.Tracer(bool(args.trace))
-    run = Run(work, args.seed, args.seconds, tracer, cpus)
+    run = Run(work, args.seed, args.seconds, tracer, cpus, sampler)
     try:
         from real___time_fraud_detection_using_apache_kafka_spark.session import get_spark
 
