@@ -243,25 +243,10 @@ def main() -> None:
         "sum(id * 3 % 7) as s"
     ).collect()
     calibration = round(time.time() - t0, 3)
-    print(
-        json.dumps(
-            {
-                "metric": "all_catalog_queries_total" if bench_all else "headline_queries_total",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "sf": float(sf) if sf else None,
-                "calibration_sec": calibration,
-                **({"errors": errors} if errors else {}),
-            }
-        )
-    )
-    # Compact summary as the LAST stdout line (r12, VERDICT r11 item 3,
-    # additions-only): the full line above is ~6 KB of per-query detail
-    # and round 10's copy was lost to tail truncation in the capture
-    # window, leaving the next round with no parseable baseline
-    # (PERF_r11 `prev_bench_ok` false).  A truncated tail now still
-    # yields total + calibration + n for round-over-round comparison.
+    # Compact summary first, then the full per-query JSON as the LAST
+    # stdout line, which is the line the harness parses.  The summary
+    # still gives total + calibration + n if the ~6 KB full line is
+    # lost to tail truncation.
     print(
         json.dumps(
             {
@@ -275,6 +260,19 @@ def main() -> None:
                 "n": len(timings),
                 "sf": float(sf) if sf else None,
                 "calibration_sec": calibration,
+            }
+        )
+    )
+    print(
+        json.dumps(
+            {
+                "metric": "all_catalog_queries_total" if bench_all else "headline_queries_total",
+                "value": total,
+                "unit": "sec",
+                "queries": timings,
+                "sf": float(sf) if sf else None,
+                "calibration_sec": calibration,
+                **({"errors": errors} if errors else {}),
             }
         )
     )

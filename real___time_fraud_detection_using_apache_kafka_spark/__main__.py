@@ -10,11 +10,13 @@ dashboard.py as separate processes):
   column exprs) to JSON files or a Kafka topic.
 - ``train``   = FD/model.py: fit the one shared MLlib pipeline, report the
   metric battery, persist model + metrics artifacts.
-- ``stream``  = FD/consumer.py + FD/dashboard.py: score a live stream with
-  the broadcast pipeline model (or the deterministic rule), keep running
-  counters in a queryable memory sink, and poll-print them — the 2 s
-  dashboard tick against incrementally-maintained state instead of an
-  O(stream) log re-parse.
+- ``stream``  = FD/consumer.py + FD/dashboard.py: one streaming query
+  scores a live stream with the broadcast pipeline model (or the
+  deterministic rule) into a queryable memory sink of score bins; the
+  running counters and the live optimal threshold are both read from it
+  and poll-printed — the 2 s dashboard tick against
+  incrementally-maintained state instead of an O(stream) log re-parse.
+  ``--checkpoint`` resumes counters and threshold together.
 
 Everything here is a thin argparse shim over the library; no logic lives
 in this module.
@@ -24,6 +26,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import shutil
 import sys
 import tempfile
 import time
@@ -130,10 +133,11 @@ def cmd_train(args: argparse.Namespace) -> int:
 
 
 def cmd_stream(args: argparse.Namespace) -> int:
+    from .ml.pipeline import featurize
     from .sources.generator import stream_transactions
     from .streaming.pipeline import (
         binned_score_counts,
-        run_scoring_pipeline,
+        counts_from_bins,
         score_stream,
         threshold_from_bins,
     )
@@ -144,42 +148,44 @@ def cmd_stream(args: argparse.Namespace) -> int:
         from pyspark.ml import PipelineModel
 
         model = PipelineModel.load(args.model_dir)
+
+    def counts() -> dict[int, int]:
+        rows = counts_from_bins(spark.table("pr_bins")).collect()
+        return {int(r["prediction"]): int(r["n"]) for r in rows}
+
     ckpt = args.checkpoint or tempfile.mkdtemp(prefix="fraud_stream_ckpt_")
-    query = run_scoring_pipeline(spark, ckpt, model=model)
-    # second query off the same logical source: incremental PR-curve
-    # state (<=1000 rows) so --watch can show the live optimal threshold
-    bins_q = (
-        binned_score_counts(score_stream(stream_transactions(spark),
-                                         model=model))
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("pr_bins")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="pr_bins_ckpt_"))
-        .start()
-    )
-    deadline = time.time() + args.seconds
+    query = None
     try:
+        # ONE query: the counters and the live optimal threshold both
+        # read this <=1000-row PR-bin state, so they cover the same
+        # records and resume together from the one checkpoint
+        scored = score_stream(featurize(stream_transactions(spark)),
+                              model=model)
+        query = (
+            binned_score_counts(scored)
+            .writeStream.outputMode("complete")
+            .format("memory")
+            .queryName("pr_bins")
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        deadline = time.time() + args.seconds
         while time.time() < deadline:
             time.sleep(args.tick)
             if args.watch:
-                rows = spark.sql(
-                    "SELECT prediction, n FROM fraud_counts ORDER BY prediction"
-                ).collect()
-                counts = {int(r["prediction"]): int(r["n"]) for r in rows}
-                line = f"non-fraud: {counts.get(0, 0)}  fraud: {counts.get(1, 0)}"
-                if spark.table("pr_bins").limit(1).count():
+                c = counts()
+                line = f"non-fraud: {c.get(0, 0)}  fraud: {c.get(1, 0)}"
+                if c:
                     t = threshold_from_bins(spark.table("pr_bins")).first()
                     line += f"  optimal-threshold: {t.threshold:.3f} (f1 {t.f1:.3f})"
                 print(line, flush=True)
     finally:
-        query.stop()
-        bins_q.stop()
-    rows = spark.sql("SELECT prediction, n FROM fraud_counts").collect()
-    total = sum(int(r["n"]) for r in rows)
-    print(json.dumps({
-        "processed": total,
-        "counts": {int(r["prediction"]): int(r["n"]) for r in rows},
-    }))
+        if query is not None:
+            query.stop()
+        if not args.checkpoint:
+            shutil.rmtree(ckpt, ignore_errors=True)
+    c = counts()
+    print(json.dumps({"processed": sum(c.values()), "counts": c}))
     return 0
 
 

@@ -106,9 +106,8 @@ def interval_join(left: DataFrame, right: DataFrame, on: Sequence[str],
                   left_ts: str, right_ts: str, lookback: str,
                   how: str = "inner") -> DataFrame:
     """Join each left row to right rows of the same key with
-    ``right_ts`` in ``(left_ts - lookback, left_ts]`` — the batch analog
-    of the watermarked stream-stream interval join
-    (streaming.stateful.txn_event_interval_join).
+    ``right_ts`` in ``(left_ts - lookback, left_ts]`` — the batch form
+    of a watermarked stream-stream interval join.
 
     Scale design: a naive ``l.ts BETWEEN r.ts AND r.ts + d`` join is a
     per-key range cross-join — O(n*m) on hot keys.  Here the right side
@@ -187,12 +186,10 @@ def session_stats(df: DataFrame, key_cols: Sequence[str], ts_col: str,
 
 def bounce_report(sessions: DataFrame) -> DataFrame:
     """Entry-type bounce rollup over a per-session frame with columns
-    ``(entry_type, n_events, duration_sec)`` — the SHARED final stage of
-    batch ``session_bounce_stats`` and its streaming
-    ``session_entry_sessions`` twin (r9, VERDICT r8 item 8): both tiers
-    produce the same per-session schema, so parity between them is the
-    parity of this one aggregate.  All ratios divide exact integers
-    once, rounded at 6."""
+    ``(entry_type, n_events, duration_sec)`` — the final stage of
+    ``session_bounce_stats``; any producer of that per-session schema
+    gets the same rollup.  All ratios divide exact integers once,
+    rounded at 6."""
     return sessions.groupBy("entry_type").agg(
         F.count("*").alias("n_sessions"),
         F.sum(F.when(F.col("n_events") == 1, 1).otherwise(0)).alias("n_bounce"),

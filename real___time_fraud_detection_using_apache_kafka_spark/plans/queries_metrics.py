@@ -548,8 +548,8 @@ def dashboard_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The whole panel is a single `HashAggregate` (10 mergeable cells) —
     at 100 TB the dashboard refresh is one partial-agg pass, or O(1)
-    when served from the `running_confusion` streaming state, which
-    maintains the same cells incrementally.
+    when served from the ``streaming.pipeline.dashboard_state`` single
+    state row, which maintains the same cells incrementally.
     """
     s = scored_events(spark, sf_dir)
     one = F.lit(1.0)

@@ -431,13 +431,12 @@ HLL_M = 256  # 2^8 registers; 23-bit rho domain under the 2^31 hash
 def hll_bucket_rank(df: DataFrame, key_sql: str, m: int = HLL_M) -> DataFrame:
     """Adds the HLL register coordinates ``b`` (bucket) and ``rho``
     (geometric rank) for ``key_sql`` — the ONE definition of the
-    hash→mixer→rank pipeline, shared by the batch estimator and the
-    streaming dual.  The streaming dual feeds these pre-hashed pairs
-    (cf. ``cms_sketch_stream``) so batch/stream register parity is
-    STRUCTURAL — both sides evaluate the same JVM expressions — rather
-    than dependent on three libm implementations (JVM Math.log, CPython
-    math.log, DuckDB's C libm) agreeing near an exact floor boundary
-    (round-7 ADVICE item)."""
+    hash→mixer→rank pipeline.  Any incremental consumer should take
+    these pre-hashed pairs so register parity is STRUCTURAL — every
+    side evaluates the same JVM expressions — rather than dependent on
+    three libm implementations (JVM Math.log, CPython math.log,
+    DuckDB's C libm) agreeing near an exact floor boundary (round-7
+    ADVICE item)."""
     W = _MIX_P // m + 1  # bucket-quotient domain: u = (w+1)/W in (0,1]
     ph = _mixed_hash(df, key_sql)
     w = F.col("g").cast("long") / F.lit(m)
@@ -1419,8 +1418,7 @@ def hll_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregations OVER CELLS (thousands of rows), not over data.  The
     exact counts ride along only to surface the error; production
     keeps the cell table as an incrementally-maintained day-partitioned
-    register store (the streaming dual ``hll_distinct_stream`` is the
-    same state fed incrementally).
+    register store (cell-wise max is the merge).
     """
     m = HLL_M
     e = load_table(spark, sf_dir, "events").filter(

@@ -132,9 +132,9 @@ def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tumbling_event_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T7's tumbling event-time window as a BATCH query: ``F.window``
     buckets each event into its 6-hour tumble, then a plain grouped
-    aggregate — the exact expression the streaming path runs with
-    ``withWatermark`` (pkg/streaming/pipeline.py windowed_counts), so
-    batch backfill and live streaming share window semantics.  One
+    aggregate — the same ``F.window`` expression a streaming query
+    runs under ``withWatermark``, so batch backfill and live streaming
+    share window semantics.  One
     shuffle on (window, event_type); window assignment itself is narrow
     arithmetic inside the scan stage."""
     e = load_table(spark, sf_dir, "events")
@@ -948,11 +948,7 @@ def session_bounce_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one (user) shuffle for the session windows — the same
     partitioning serves lag, session-sum, and entry row_number (one
     Window exchange, user-bounded partitions), then two hash
-    aggregates onto session- and entry-type-bounded keys.  The
-    streaming twin is ``streaming.pipeline.session_entry_sessions``
-    (``session_window`` + struct-min arg-min entry state) feeding the
-    same ``bounce_report`` rollup; parity on a replayed fixture is
-    pinned in tests/test_streaming.py."""
+    aggregates onto session- and entry-type-bounded keys."""
     e = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
@@ -967,6 +963,4 @@ def session_bounce_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .getField("event_type")
         .alias("entry_type"),
     )
-    # shared with the streaming session_entry_sessions twin: both tiers
-    # produce the same per-session schema and this one rollup
     return bounce_report(sessions)

@@ -136,8 +136,7 @@ class TxnTable:
         replay dedup (ADVICE r4).  Per-call cost is O(entries since
         that app's last batch commit), not O(total log length) — a
         stream's own ledger probe reads one entry, however long-lived
-        the table (sinks additionally cache the result in their
-        closure, see ``rule_alert_sink``)."""
+        the table."""
         for v in reversed(self.versions()):
             m = self._entry(v).get("meta") or {}
             if m.get("app_id") == app_id and "batch_id" in m:
@@ -208,10 +207,9 @@ def txn_batch_sink(table: TxnTable, app_id: str):
         q = (df.writeStream.foreachBatch(txn_batch_sink(tbl, "scores"))
                .option("checkpointLocation", ckpt).start())
 
-    This closes the gap the counter-ledger pattern
-    (streaming/pipeline.py foreach_batch_dual_sink) approximates: there
-    the ledger and data land in separate writes; here the ledger IS the
-    atomic commit."""
+    A batch-id counter ledger written beside the data only approximates
+    this, because ledger and data land in separate writes; here the
+    ledger IS the atomic commit."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         if batch_id <= table.last_batch(app_id):

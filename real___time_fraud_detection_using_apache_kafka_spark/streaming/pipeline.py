@@ -2,19 +2,22 @@
 
 The reference's whole runtime is: Kafka JSON in -> per-record preprocess +
 score -> running fraud/non-fraud counters -> append log (FD/consumer.py:
-104-156).  Here that is ONE streaming query graph:
+104-156).  Here those are the stages of one streaming query graph:
 
     source (kafka | rate-generator) -> from_json(TXN_SCHEMA)
-        -> feature projection (pure columns, F3/F4)
+        -> dead-letter channel (T6)
+        -> feature projection (``ml.pipeline.featurize``; pure columns)
         -> score (broadcast model | threshold rule)
-        -> fan-out: running counters (T4, update mode)
-                    scored append sink (S5 -> parquet/memory)
-                    dead-letter channel (T6)
+        -> state: score bins (the ``stream`` command: running counters,
+           live optimal threshold, calibration and drift all read them)
+           or running counters (``run_scoring_pipeline``)
+        -> sink: memory table, or the scored append sink (S5 -> parquet)
 
-Scale: the score path is a stateless narrow map (no shuffle); the counter
-aggregation keeps 2 state rows; checkpointing replaces Kafka group
-offsets (T1).  ``maxOffsetsPerTrigger`` bounds micro-batch size for
-backpressure at production rates.
+Scale: the score path is a stateless narrow map (no shuffle); the bin
+state holds at most ``n_bins`` rows and the counter state 2 rows;
+checkpointing replaces Kafka group offsets (T1).
+``maxOffsetsPerTrigger`` bounds micro-batch size for backpressure at
+production rates.
 """
 
 from __future__ import annotations
@@ -95,8 +98,11 @@ def score_stream(txns: DataFrame, model=None, threshold: float = 0.5) -> DataFra
 
     With an MLlib ``PipelineModel`` the transform is vectorized per
     micro-batch and the model is broadcast once — not reloaded per record
-    like the reference.  Without a model, a deterministic amount/location
-    rule stands in (same shape: adds ``prediction`` + ``probability``).
+    like the reference.  Model input must already be featurized
+    (``ml.pipeline.featurize``): the model reads the derived time
+    columns, and this function does not add them.  Without a model, a
+    deterministic amount/location rule stands in (same shape: adds
+    ``prediction`` + ``probability``).
     """
     if model is not None:
         scored = model.transform(txns)
@@ -128,22 +134,6 @@ def running_counts(scored: DataFrame) -> DataFrame:
     return scored.groupBy(F.col("prediction")).agg(F.count("*").alias("n"))
 
 
-def running_confusion(scored: DataFrame,
-                      label_col: str = "is_fraud") -> DataFrame:
-    """Incremental 2x2 confusion state: groupBy(actual, predicted) over
-    the scored stream — four state rows, O(delta) per micro-batch.  The
-    ENTIRE dashboard metric battery (accuracy/precision/recall/F1/MCC/
-    specificity/FPR/FNR) derives from these four counts with plain column
-    arithmetic at read time, so the reference's O(stream-length)
-    log-reparse per 2 s tick becomes a constant-time lookup."""
-    return (
-        scored.groupBy(
-            F.col(label_col).cast("int").alias("actual"),
-            F.col("prediction").cast("int").alias("predicted"),
-        ).agg(F.count("*").alias("n"))
-    )
-
-
 def binned_score_counts(scored: DataFrame, n_bins: int = 1000,
                         proba_col: str = "probability_fraud",
                         label_col: str = "is_fraud") -> DataFrame:
@@ -167,6 +157,25 @@ def binned_score_counts(scored: DataFrame, n_bins: int = 1000,
         F.count("*").alias("cnt"),
         F.sum(F.col(label_col).cast("long")).alias("pos"),
     )
+
+
+# score_stream's default 0.5 threshold on binned_score_counts' default
+# 1000-bin grid: floor(p * 1000) >= 500 exactly when p >= 0.5, because
+# p * 1000 rounds monotonically and the largest double below 0.5 lands
+# in bin 499.
+_FRAUD_BIN = 500
+
+
+def counts_from_bins(bins: DataFrame) -> DataFrame:
+    """The running fraud / non-fraud counters as a fold of the binned PR
+    state: non-fraud = Σcnt over bins below the 0.5 threshold, fraud =
+    Σcnt over the rest.  Same schema and values as :func:`running_counts`
+    over the same scored rows, read from ≤ 1000 state rows, so one
+    streaming query serves both the counters and
+    :func:`threshold_from_bins`."""
+    return bins.groupBy(
+        (F.col("bin") >= _FRAUD_BIN).cast("int").alias("prediction")
+    ).agg(F.sum("cnt").alias("n"))
 
 
 def calibration_from_bins(bins: DataFrame, n_bins: int = 1000,
@@ -266,127 +275,6 @@ def threshold_from_bins(bins: DataFrame, n_bins: int = 1000) -> DataFrame:
     )
 
 
-def windowed_counts(scored: DataFrame, ts_col: str = "time",
-                    window: str = "1 minute",
-                    watermark: str = "2 minutes") -> DataFrame:
-    """T7 extension (absent in the reference): event-time tumbling window
-    with watermark-bounded state — late data beyond the watermark is
-    dropped deterministically instead of growing state forever."""
-    with_ts = scored.withColumn("event_ts", F.timestamp_seconds(F.col(ts_col)))
-    return (
-        with_ts.withWatermark("event_ts", watermark)
-        .groupBy(F.window("event_ts", window), "prediction")
-        .agg(F.count("*").alias("n"), F.round(F.sum("amount"), 2).alias("amount_sum"))
-    )
-
-
-def sliding_counts(scored: DataFrame, ts_col: str = "time",
-                   window: str = "2 minutes", slide: str = "1 minute",
-                   watermark: str = "4 minutes") -> DataFrame:
-    """T7 extension: sliding event-time windows — each event lands in
-    window/slide overlapping windows (here 2), giving a smoothed fraud
-    rate per minute.  State per key is bounded by watermark + overlap
-    factor; Spark expands the window assignment before the single
-    partial-agg shuffle, so the cost is (overlap x) rows shuffled, not
-    extra passes."""
-    with_ts = scored.withColumn("event_ts", F.timestamp_seconds(F.col(ts_col)))
-    return (
-        with_ts.withWatermark("event_ts", watermark)
-        .groupBy(F.window("event_ts", window, slide), "prediction")
-        .agg(F.count("*").alias("n"), F.round(F.sum("amount"), 2).alias("amount_sum"))
-    )
-
-
-def session_counts(scored: DataFrame, ts_col: str = "time",
-                   gap: str = "30 minutes",
-                   watermark: str = "1 hour") -> DataFrame:
-    """T7 extension: streaming-native gap sessions per customer via
-    ``session_window`` — Spark merges/extends open sessions in the state
-    store as events arrive and emits a session once the watermark passes
-    its close (the incremental dual of operators.temporal.sessionize,
-    which is the batch implementation of the same semantics)."""
-    with_ts = scored.withColumn("event_ts", F.timestamp_seconds(F.col(ts_col)))
-    return (
-        with_ts.withWatermark("event_ts", watermark)
-        .groupBy(F.session_window("event_ts", gap), "customer_id")
-        .agg(
-            F.count("*").alias("n_txn"),
-            F.round(F.sum("amount"), 2).alias("amount_sum"),
-            F.sum("prediction").alias("n_fraud"),
-        )
-        .select(
-            "customer_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_txn", "amount_sum", "n_fraud",
-        )
-    )
-
-
-def session_entry_sessions(events: DataFrame, ts_col: str = "ts",
-                           gap: str = "30 minutes",
-                           watermark: str = "1 hour") -> DataFrame:
-    """Streaming twin of the ``session_bounce_stats`` sessionizer (r9,
-    VERDICT r8 item 8): gap sessions per user via ``session_window``,
-    with the session's ENTRY event tracked as arg-min state — the
-    struct-min over (ts, event_id, event_type) is an associative,
-    incrementally-mergeable aggregate, so Spark maintains it in the
-    session state store and ties break deterministically on
-    (ts, event_id) exactly like the batch tier.
-
-    Emits one row per watermark-closed session with the SAME schema the
-    batch plan's per-session frame has — feed the emitted table to
-    ``operators.temporal.bounce_report`` for the entry-type bounce
-    rollup (chaining a second stateful aggregate onto a session window
-    in append mode is not supported, and the rollup is a tiny batch
-    aggregate over the sink anyway).  Input needs (user_id, ts,
-    event_id, event_type) with ``ts`` as an event-time timestamp."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(ts_col, gap), F.col("user_id"))
-        .agg(
-            F.count("*").alias("n_events"),
-            (
-                (
-                    F.unix_micros(F.max(ts_col).cast("timestamp"))
-                    - F.unix_micros(F.min(ts_col).cast("timestamp"))
-                )
-                / 1_000_000
-            ).cast("long").alias("duration_sec"),
-            # struct-min = lexicographic (ts, event_id): the entry event
-            F.min(F.struct(ts_col, "event_id", "event_type"))
-            .getField("event_type")
-            .alias("entry_type"),
-        )
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_events", "duration_sec", "entry_type",
-        )
-    )
-
-
-def dedup_stream(txns: DataFrame, ts_col: str = "time",
-                 keys: list[str] | None = None,
-                 watermark: str = "10 minutes") -> DataFrame:
-    """Streaming exact dedup with bounded state (D1's streaming dual).
-
-    At-least-once sources (T1) redeliver records on retry; the reference
-    would double-count them (FD/consumer.py:127-131 counts every poll).
-    ``dropDuplicatesWithinWatermark`` keeps one state row per key only
-    until the watermark passes it — state is O(keys-per-watermark-window),
-    not O(stream), which is what makes exactly-once counting survive
-    100 TB/day of redelivered traffic."""
-    keys = keys or ["transaction_id"]
-    with_ts = txns.withColumn("event_ts", F.timestamp_seconds(F.col(ts_col)))
-    return (
-        with_ts.withWatermark("event_ts", watermark)
-        .dropDuplicatesWithinWatermark(keys)
-        .drop("event_ts")
-    )
-
-
 def dashboard_state(scored: DataFrame,
                     proba_col: str = "probability_fraud",
                     pred_col: str = "prediction",
@@ -480,9 +368,13 @@ def dashboard_from_state(state: DataFrame) -> DataFrame:
 def run_scoring_pipeline(spark: SparkSession, checkpoint_dir: str,
                          source: DataFrame | None = None, model=None,
                          queryable_name: str = "fraud_counts") -> StreamingQuery:
-    """End-to-end streaming query (entry point 1 of SURVEY.md §3): the
-    counters land in an in-memory queryable sink (T5) — the dashboard's
-    2 s poll becomes ``SELECT * FROM fraud_counts``."""
+    """Running-counters streaming query: ``running_counts`` over the
+    scored source, landing in an in-memory queryable sink (T5) — a
+    dashboard poll becomes ``SELECT * FROM fraud_counts``.  A model
+    source must already be featurized (see :func:`score_stream`).  The
+    ``stream`` command reads its counters from the score bins instead
+    (:func:`counts_from_bins`), so they share one query with the live
+    threshold."""
     src = source if source is not None else stream_transactions(spark)
     scored = score_stream(src, model=model)
     return (
@@ -505,51 +397,4 @@ def scored_append_sink(scored: DataFrame, path: str, checkpoint_dir: str,
         .option("path", path)
         .option("checkpointLocation", checkpoint_dir)
         .start()
-    )
-
-
-def foreach_batch_dual_sink(scored: DataFrame, data_path: str,
-                            counts_path: str, checkpoint_dir: str
-                            ) -> StreamingQuery:
-    """SURVEY.md §3 entry-point-1 fan-out: ONE streaming query feeding two
-    sinks via foreachBatch — (a) the scored-transaction append log, (b)
-    per-batch class counts — instead of running two queries that each
-    re-read and re-score the source.
-
-    Counter semantics are replay-safe: each micro-batch appends its counts
-    tagged with batch_id, and ``read_running_counts`` folds duplicates (a
-    batch re-run after failure re-appends the SAME batch_id, so max-per-
-    (batch, class) before summing gives effectively-exactly-once totals,
-    while the data sink stays plain append/at-least-once like the
-    reference's log).
-    """
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        batch_df.write.mode("append").parquet(data_path)
-        (
-            batch_df.groupBy("prediction")
-            .count()
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(counts_path)
-        )
-        batch_df.unpersist()
-
-    return (
-        scored.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def read_running_counts(spark: SparkSession, counts_path: str) -> DataFrame:
-    """Current totals from the dual-sink counter ledger: dedupe batch
-    replays (max per batch_id x class), then sum — O(batches), tiny."""
-    ledger = spark.read.parquet(counts_path)
-    return (
-        ledger.groupBy("batch_id", "prediction")
-        .agg(F.max("count").alias("count"))
-        .groupBy("prediction")
-        .agg(F.sum("count").alias("count"))
     )

@@ -5,6 +5,8 @@ argparse surface, not just the library functions."""
 from __future__ import annotations
 
 import json
+import os
+import tempfile
 
 from pyspark.sql import functions as F
 
@@ -31,11 +33,38 @@ def test_cli_produce_writes_wire_json(spark, tmp_path, capsys):
     assert back.filter(F.col("transaction_id").isNull()).count() == 0
 
 
-def test_cli_train_prints_metric_battery(tmp_path, capsys):
+def _count_query_starts(monkeypatch) -> list:
+    """Record every streaming query started from now on."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    started = []
+    real_start = DataStreamWriter.start
+
+    def start(self, *args, **kwargs):
+        q = real_start(self, *args, **kwargs)
+        started.append(q)
+        return q
+
+    monkeypatch.setattr(DataStreamWriter, "start", start)
+    return started
+
+
+def _stream(capsys, *extra: str) -> dict:
+    """Run the ``stream`` command; return its final JSON line."""
+    assert main(["stream", "--seconds", "6", "--tick", "1", *extra]) == 0
+    return json.loads(capsys.readouterr().out.splitlines()[-1])
+
+
+def test_cli_train_prints_metric_battery(spark, tmp_path, capsys,
+                                         monkeypatch):
+    """train saves a model that ``stream --model-dir`` then scores with
+    (the stream featurizes before scoring), in one query whose temp
+    checkpoint is deleted on exit."""
     metrics_path = str(tmp_path / "m.json")
+    model_dir = str(tmp_path / "model")
     assert main([
         "train", "--n", "800", "--classifier", "lr",
-        "--metrics-out", metrics_path,
+        "--metrics-out", metrics_path, "--model-dir", model_dir,
     ]) == 0
     captured = capsys.readouterr().out
     battery = json.loads(captured.splitlines()[0])
@@ -43,6 +72,45 @@ def test_cli_train_prints_metric_battery(tmp_path, capsys):
         assert k in battery, k
     with open(metrics_path) as fh:
         assert json.load(fh)["accuracy"] == battery["accuracy"]
+
+    started = _count_query_starts(monkeypatch)
+    ckpt = str(tmp_path / "temp_ckpt")
+    monkeypatch.setattr(tempfile, "mkdtemp", lambda prefix="": ckpt)
+    out = _stream(capsys, "--model-dir", model_dir)
+    assert len(started) == 1
+    assert out["processed"] >= 1
+    assert out["processed"] == sum(out["counts"].values())
+    assert spark.streams.active == []
+    assert not os.path.exists(ckpt)
+
+
+def test_cli_stream_one_query_resumes_from_checkpoint(spark, tmp_path, capsys,
+                                                      monkeypatch):
+    """``stream`` runs ONE query; the counters are a fold of its PR bins,
+    so a restart on the same --checkpoint resumes the counters and the
+    live threshold's state together."""
+    started = _count_query_starts(monkeypatch)
+    ckpt = str(tmp_path / "ckpt")
+
+    def bins() -> dict:
+        return {r["bin"]: r["cnt"] for r in spark.table("pr_bins").collect()}
+
+    first = _stream(capsys, "--checkpoint", ckpt)
+    first_bins = bins()
+    assert len(started) == 1 and spark.streams.active == []
+    assert first["processed"] >= 1
+    assert sum(first_bins.values()) == first["processed"]
+
+    second = _stream(capsys, "--checkpoint", ckpt, "--watch")
+    second_bins = bins()
+    assert len(started) == 2 and spark.streams.active == []
+    assert sum(second_bins.values()) == second["processed"]
+    # the restart continued from the checkpointed state: every bin the
+    # first run filled is still there, and the rows produced while the
+    # command was down were caught up on top
+    assert second["processed"] > first["processed"]
+    assert all(second_bins.get(b, 0) >= n for b, n in first_bins.items())
+    assert os.path.isdir(os.path.join(ckpt, "commits"))
 
 
 def test_stream_sink_then_evaluate(spark, tmp_path, capsys):

@@ -164,270 +164,6 @@ class TestKmvSketch:
                 assert r.rel_err <= 5.0 / math.sqrt(KMV_K - 2)
 
 
-def _atomic_batch_writer(tmp_path, src):
-    """One logical batch -> ONE file, made visible atomically.
-
-    ``df.write.mode("append")`` lands part files one by one as tasks
-    commit, and the already-running stream triggers continuously — under
-    load a trigger can grab a SUBSET of a logical batch, splitting it
-    across micro-batches in file order, not time order (the round-4
-    flake).  Stage to a scratch dir with coalesce(1), then os.rename the
-    single part file into the source dir: POSIX rename is atomic, so
-    the file source sees the whole batch or nothing.
-    """
-    import itertools
-    import os
-    import shutil
-
-    counter = itertools.count()
-
-    def write_batch(df):
-        i = next(counter)
-        stage = f"{tmp_path}/stage{i}"
-        df.coalesce(1).select(
-            F.to_json(F.struct(*df.columns)).alias("v")
-        ).write.text(stage)
-        part = next(
-            p for p in os.listdir(stage)
-            if p.startswith("part-") and p.endswith(".txt")
-        )
-        os.makedirs(src, exist_ok=True)
-        os.rename(f"{stage}/{part}", f"{src}/batch{i}.txt")
-        shutil.rmtree(stage, ignore_errors=True)
-
-    return write_batch
-
-
-class TestEwmaStreamParity:
-    def test_stream_state_matches_batch_fold(self, spark, tmp_path):
-        """The streaming EWMA (two scalars of state per user) replayed
-        over a time-ordered stream must land on the SAME per-user state
-        as the batch array-fold catalog query — same recurrence, same
-        float-op sequence, so equality is exact at the catalog's
-        6-decimal rounding, not approximate."""
-        import pandas as pd
-
-        from real___time_fraud_detection_using_apache_kafka_spark.plans.queries_timeseries import (
-            ewma_user_value,
-        )
-        from real___time_fraud_detection_using_apache_kafka_spark.streaming.stateful import ewma_stream
-
-        rng = pd.date_range("2024-05-01", periods=60, freq="h")
-        pdf = pd.DataFrame(
-            {
-                "event_id": range(60),
-                "ts": rng,
-                "user_id": [i % 5 + 1 for i in range(60)],
-                "event_type": ["view"] * 60,
-                "value": [float((i * 37) % 101) + 0.25 for i in range(60)],
-                "props": ["{}"] * 60,
-            }
-        )
-        sf = tmp_path / "sf"
-        spark.createDataFrame(pdf).write.parquet(f"{sf}/events.parquet")
-        expected = {
-            r.user_id: (r.n_events, r.ewma)
-            for r in ewma_user_value(spark, str(sf)).collect()
-        }
-
-        src, ckpt = f"{tmp_path}/src", f"{tmp_path}/ckpt"
-        early = spark.createDataFrame(pdf[pdf.event_id < 30])
-        late = spark.createDataFrame(pdf[pdf.event_id >= 30])
-
-        write_batch = _atomic_batch_writer(tmp_path, src)
-
-        schema = ("event_id long, ts timestamp, user_id long, "
-                  "event_type string, value double, props string")
-        write_batch(early)
-        stream = (
-            spark.readStream.schema("v string").text(src)
-            .select(F.from_json(F.col("v"), schema).alias("e"))
-            .select("e.*")
-        )
-        q = (
-            ewma_stream(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("ewma_t")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            write_batch(late)  # second micro-batch: state must carry
-            q.processAllAvailable()
-            latest = {
-                r.user_id: (r.n_events, round(r.ewma, 6))
-                for r in spark.sql(
-                    "SELECT user_id, n_events, ewma FROM ("
-                    " SELECT *, row_number() OVER ("
-                    "   PARTITION BY user_id ORDER BY n_events DESC) rk"
-                    " FROM ewma_t) WHERE rk = 1"
-                ).collect()
-            }
-        finally:
-            q.stop()
-        assert latest == expected, {"stream": latest, "batch": expected}
-
-    def test_ordered_variant_matches_batch_under_shuffled_batches(
-        self, spark, tmp_path
-    ):
-        """The watermark-buffered variant must land on the batch fold
-        even when micro-batches arrive in REVERSED time order — the
-        exact failure mode of the in-order operator.  Late rows stay
-        inside the watermark allowance, and far-future sentinel events
-        advance the watermark past all real data so everything folds."""
-        import pandas as pd
-
-        from real___time_fraud_detection_using_apache_kafka_spark.plans.queries_timeseries import (
-            ewma_user_value,
-        )
-        from real___time_fraud_detection_using_apache_kafka_spark.streaming.stateful import (
-            ewma_stream_ordered,
-        )
-
-        rng = pd.date_range("2024-05-01", periods=60, freq="h")
-        pdf = pd.DataFrame(
-            {
-                "event_id": range(60),
-                "ts": rng,
-                "user_id": [i % 5 + 1 for i in range(60)],
-                "event_type": ["view"] * 60,
-                "value": [float((i * 37) % 101) + 0.25 for i in range(60)],
-                "props": ["{}"] * 60,
-            }
-        )
-        sf = tmp_path / "sf"
-        spark.createDataFrame(pdf).write.parquet(f"{sf}/events.parquet")
-        expected = {
-            r.user_id: (r.n_events, round(r.ewma, 6))
-            for r in ewma_user_value(spark, str(sf)).collect()
-        }
-
-        src, ckpt = f"{tmp_path}/src", f"{tmp_path}/ckpt"
-        write_batch = _atomic_batch_writer(tmp_path, src)
-
-        def sentinel(ts):
-            return spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "event_id": [10_000],
-                        "ts": [pd.Timestamp(ts)],
-                        "user_id": [999],
-                        "event_type": ["view"],
-                        "value": [0.0],
-                        "props": ["{}"],
-                    }
-                )
-            )
-
-        # LATE half first, early half second — reversed cross-batch order
-        write_batch(spark.createDataFrame(pdf[pdf.event_id >= 30]))
-        schema = ("event_id long, ts timestamp, user_id long, "
-                  "event_type string, value double, props string")
-        stream = (
-            spark.readStream.schema("v string").text(src)
-            .select(F.from_json(F.col("v"), schema).alias("e"))
-            .select("e.*")
-            .withWatermark("ts", "10 days")
-        )
-        q = (
-            ewma_stream_ordered(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("ewma_ord_t")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            write_batch(spark.createDataFrame(pdf[pdf.event_id < 30]))
-            q.processAllAvailable()
-            # two sentinel batches: batch N folds with the watermark
-            # computed from batch N-1's max event time
-            write_batch(sentinel("2024-07-01"))
-            q.processAllAvailable()
-            write_batch(sentinel("2024-07-02"))
-            q.processAllAvailable()
-            rows = spark.sql(
-                "SELECT user_id, n_events, ewma, n_pending FROM ("
-                " SELECT *, row_number() OVER ("
-                "   PARTITION BY user_id ORDER BY n_events DESC, n_pending ASC) rk"
-                " FROM ewma_ord_t) WHERE rk = 1 AND user_id <> 999"
-            ).collect()
-        finally:
-            q.stop()
-        latest = {r.user_id: (r.n_events, round(r.ewma, 6)) for r in rows}
-        assert all(r.n_pending == 0 for r in rows), rows
-        assert latest == expected, {"stream": latest, "batch": expected}
-
-
-class TestKmvStreamParity:
-    def test_stream_sketch_state_matches_batch_exactly(self, spark, sf_dir, tmp_path):
-        """KMV state is an order-independent mergeable set union, so the
-        stream must land on the EXACT batch estimate even when
-        micro-batches split the data arbitrarily (here: by event_id
-        parity, deliberately NOT time order)."""
-        from real___time_fraud_detection_using_apache_kafka_spark.plans.queries_sketch import (
-            kmv_distinct_users,
-        )
-        from real___time_fraud_detection_using_apache_kafka_spark.sources.tables import load_table
-        from real___time_fraud_detection_using_apache_kafka_spark.streaming.stateful import (
-            kmv_distinct_stream,
-        )
-
-        expected = {
-            r.event_type: r.kmv_estimate
-            for r in kmv_distinct_users(spark, sf_dir).collect()
-        }
-
-        e = load_table(spark, sf_dir, "events").select(
-            "event_id", "event_type", "user_id"
-        )
-        src, ckpt = f"{tmp_path}/src", f"{tmp_path}/ckpt"
-
-        def write_batch(df):
-            df.select(
-                F.to_json(F.struct(*df.columns)).alias("v")
-            ).write.mode("append").text(src)
-
-        write_batch(e.filter(F.col("event_id") % 2 == 0))
-        stream = (
-            spark.readStream.schema("v string").text(src)
-            .select(
-                F.from_json(
-                    F.col("v"),
-                    "event_id long, event_type string, user_id long",
-                ).alias("e")
-            )
-            .select("e.*")
-        )
-        q = (
-            kmv_distinct_stream(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("kmv_t")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            write_batch(e.filter(F.col("event_id") % 2 == 1))
-            q.processAllAvailable()
-            latest = {
-                r.event_type: r.kmv_estimate
-                for r in spark.sql(
-                    "SELECT event_type, kmv_estimate FROM ("
-                    " SELECT *, row_number() OVER ("
-                    "   PARTITION BY event_type ORDER BY nk DESC) rk"
-                    " FROM kmv_t) WHERE rk = 1"
-                ).collect()
-            }
-        finally:
-            q.stop()
-        assert latest == expected
-
-
 class TestPagerankStrategies:
     def test_copartition_matches_broadcast(self, spark):
         """Both physical strategies run the same recurrence — ranks must
@@ -671,699 +407,3 @@ class TestCommonNeighborsCapped:
 
         assert "max_degree=16" in inspect.getsource(common_neighbors_capped)
         assert "g.d <= 16" in QUERIES["common_neighbors_capped"].oracle
-
-
-class TestKalmanStreamParity:
-    def test_kalman_ordered_matches_jvm_fold_under_shuffled_batches(
-        self, spark, tmp_path
-    ):
-        """The streaming Kalman must land on the batch ``aggregate``
-        expression's (level, variance) bit-for-bit per user, with
-        micro-batches in REVERSED time order — same protocol as the
-        EWMA ordered parity test, but the expected side is the JVM
-        fold (Python-vs-JVM IEEE parity, not Python-vs-Python)."""
-        import pandas as pd
-
-        from real___time_fraud_detection_using_apache_kafka_spark.streaming.stateful import (
-            kalman_stream_ordered,
-        )
-
-        rng = pd.date_range("2024-05-01", periods=60, freq="h")
-        pdf = pd.DataFrame(
-            {
-                "event_id": range(60),
-                "ts": rng,
-                "user_id": [i % 5 + 1 for i in range(60)],
-                "event_type": ["view"] * 60,
-                "value": [float((i * 53) % 97) + 0.5 for i in range(60)],
-                "props": ["{}"] * 60,
-            }
-        )
-        # expected: the batch fold as a JVM aggregate expression — the
-        # exact kalman_revenue_smooth recurrence, per user
-        batch = spark.createDataFrame(pdf)
-        expected = {
-            r.user_id: (round(r.lv[0], 9), round(r.lv[1], 9))
-            for r in batch.groupBy("user_id")
-            .agg(
-                F.expr(
-                    "transform(array_sort(collect_list(struct(ts, event_id, value))), "
-                    "s -> s.value)"
-                ).alias("xs")
-            )
-            .select(
-                "user_id",
-                F.expr(
-                    "aggregate(slice(xs, 2, greatest(size(xs) - 1, 0)), "
-                    "array(xs[0], cast(1000.0 as double)), "
-                    "(acc, x) -> array("
-                    "acc[0] + ((acc[1] + 0.5) / (acc[1] + 0.5 + 20.0)) * (x - acc[0]), "
-                    "(1.0 - ((acc[1] + 0.5) / (acc[1] + 0.5 + 20.0))) * (acc[1] + 0.5)))"
-                ).alias("lv"),
-            )
-            .collect()
-        }
-
-        src, ckpt = f"{tmp_path}/src", f"{tmp_path}/ckpt"
-        write_batch = _atomic_batch_writer(tmp_path, src)
-
-        def sentinel(ts):
-            return spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "event_id": [10_000],
-                        "ts": [pd.Timestamp(ts)],
-                        "user_id": [999],
-                        "event_type": ["view"],
-                        "value": [0.0],
-                        "props": ["{}"],
-                    }
-                )
-            )
-
-        write_batch(spark.createDataFrame(pdf[pdf.event_id >= 30]))
-        schema = ("event_id long, ts timestamp, user_id long, "
-                  "event_type string, value double, props string")
-        stream = (
-            spark.readStream.schema("v string").text(src)
-            .select(F.from_json(F.col("v"), schema).alias("e"))
-            .select("e.*")
-            .withWatermark("ts", "10 days")
-        )
-        q = (
-            kalman_stream_ordered(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("kal_ord_t")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            write_batch(spark.createDataFrame(pdf[pdf.event_id < 30]))
-            q.processAllAvailable()
-            write_batch(sentinel("2024-07-01"))
-            q.processAllAvailable()
-            write_batch(sentinel("2024-07-02"))
-            q.processAllAvailable()
-            rows = spark.sql(
-                "SELECT user_id, n_events, level, variance, n_pending FROM ("
-                " SELECT *, row_number() OVER ("
-                "   PARTITION BY user_id ORDER BY n_events DESC, n_pending ASC) rk"
-                " FROM kal_ord_t) WHERE rk = 1 AND user_id <> 999"
-            ).collect()
-        finally:
-            q.stop()
-        latest = {
-            r.user_id: (round(r.level, 9), round(r.variance, 9)) for r in rows
-        }
-        assert all(r.n_pending == 0 for r in rows), rows
-        assert all(r.n_events == 12 for r in rows), rows
-        assert latest == expected, {"stream": latest, "batch": expected}
-
-
-class TestHllStreamParity:
-    def test_hll_registers_merge_to_exact_batch_estimate(
-        self, spark, sf_dir, tmp_path
-    ):
-        """HLL registers are a cell-wise-max mergeable state, so the
-        stream must publish the batch query's estimate EXACTLY (at its
-        own 4-dp rounding) under arbitrary micro-batch sharding —
-        here: split by event_id parity, deliberately not time order.
-        Register coordinates are built with the batch's own JVM
-        expressions (hll_bucket_rank) upstream of the stateful op, the
-        cms_sketch_stream pattern — parity is structural."""
-        from real___time_fraud_detection_using_apache_kafka_spark.plans.queries_sketch import (
-            hll_bucket_rank,
-            hll_distinct_users,
-        )
-        from real___time_fraud_detection_using_apache_kafka_spark.sources.tables import load_table
-        from real___time_fraud_detection_using_apache_kafka_spark.streaming.stateful import (
-            hll_distinct_stream,
-        )
-
-        expected = {
-            r.event_type: r.hll_estimate
-            for r in hll_distinct_users(spark, sf_dir).collect()
-        }
-
-        # deliberately includes a null user_id row (the testdata has
-        # none): it hashes to null (b, rho) coordinates, which the
-        # stateful op must skip (the batch side filters them) — guards
-        # the dropna in hll_distinct_stream
-        src_rows = load_table(spark, sf_dir, "events").select(
-            "event_id", "event_type", "user_id"
-        ).unionByName(
-            spark.createDataFrame(
-                [(999_999_999, "purchase", None)],
-                "event_id long, event_type string, user_id long",
-            )
-        )
-        e = hll_bucket_rank(
-            src_rows, "cast(user_id as string)"
-        ).select("event_id", "event_type", "b", "rho")
-        src, ckpt = f"{tmp_path}/src", f"{tmp_path}/ckpt"
-        write_batch = _atomic_batch_writer(tmp_path, src)
-
-        write_batch(e.filter(F.col("event_id") % 2 == 0))
-        stream = (
-            spark.readStream.schema("v string").text(src)
-            .select(
-                F.from_json(
-                    F.col("v"),
-                    "event_id long, event_type string, b long, rho long",
-                ).alias("e")
-            )
-            .select("e.*")
-        )
-        q = (
-            hll_distinct_stream(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("hll_t")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            write_batch(e.filter(F.col("event_id") % 2 == 1))
-            q.processAllAvailable()
-            latest = {
-                r.event_type: r.hll_estimate
-                for r in spark.sql(
-                    "SELECT event_type, hll_estimate FROM ("
-                    " SELECT *, row_number() OVER ("
-                    "   PARTITION BY event_type ORDER BY nonempty DESC) rk"
-                    " FROM hll_t) WHERE rk = 1"
-                ).collect()
-            }
-        finally:
-            q.stop()
-        assert latest == expected
-
-
-class TestCmsStreamParity:
-    def test_cms_counters_merge_to_exact_batch_grid(
-        self, spark, sf_dir, tmp_path
-    ):
-        """CMS counters merge by cell-wise sum — the streamed grid must
-        EQUAL the batch grid (pure integers) under parity-sharded
-        micro-batches.  Bucket pairs are built with the same JVM
-        expressions on both sides."""
-        from real___time_fraud_detection_using_apache_kafka_spark.plans.queries_sketch import (
-            CMS_W, _CMS_ROWS, _MIX_P, _mixed_hash,
-        )
-        from real___time_fraud_detection_using_apache_kafka_spark.sources.tables import load_table
-        from real___time_fraud_detection_using_apache_kafka_spark.streaming.stateful import (
-            cms_sketch_stream,
-        )
-
-        def pairs_of(df):
-            keyed = _mixed_hash(
-                df.filter(F.col("user_id").isNotNull()).select(
-                    "event_id", "user_id"
-                ),
-                "cast(user_id as string)",
-            )
-            return keyed.select(
-                "event_id",
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(j).alias("j"),
-                                F.pmod(
-                                    F.pmod(
-                                        F.lit(a) * F.col("g") + F.lit(b),
-                                        F.lit(_MIX_P),
-                                    ),
-                                    F.lit(CMS_W),
-                                ).alias("b"),
-                            )
-                            for j, (a, b) in enumerate(_CMS_ROWS)
-                        ]
-                    )
-                ).alias("jb"),
-            ).select("event_id", "jb.j", "jb.b")
-
-        e = load_table(spark, sf_dir, "events")
-        batch_grid = {
-            (r.j, r.b): r.c
-            for r in pairs_of(e).groupBy("j", "b").agg(
-                F.count("*").alias("c")
-            ).collect()
-        }
-
-        src, ckpt = f"{tmp_path}/src", f"{tmp_path}/ckpt"
-        write_batch = _atomic_batch_writer(tmp_path, src)
-        write_batch(pairs_of(e.filter(F.col("event_id") % 2 == 0)))
-        stream = (
-            spark.readStream.schema("v string").text(src)
-            .select(
-                F.from_json(
-                    F.col("v"), "event_id long, j int, b long"
-                ).alias("e")
-            )
-            .select("e.*")
-        )
-        q = (
-            cms_sketch_stream(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("cms_t")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            write_batch(pairs_of(e.filter(F.col("event_id") % 2 == 1)))
-            q.processAllAvailable()
-            rows = spark.sql(
-                "SELECT j, counters FROM ("
-                " SELECT *, row_number() OVER ("
-                "   PARTITION BY j ORDER BY aggregate(counters, "
-                "     cast(0 as bigint), (a, x) -> a + x) DESC) rk"
-                " FROM cms_t) WHERE rk = 1"
-            ).collect()
-        finally:
-            q.stop()
-        stream_grid = {
-            (r.j, b): c
-            for r in rows
-            for b, c in enumerate(r.counters)
-            if c > 0
-        }
-        assert stream_grid == batch_grid
-
-
-class TestBloomStreamParity:
-    def test_bloom_words_or_fold_to_exact_batch_mask(
-        self, spark, sf_dir, tmp_path
-    ):
-        """Bloom mask words merge by cell-wise OR — the streamed mask
-        must EQUAL the batch-built packed bitmask (pure integers) under
-        parity-sharded micro-batches.  Bit positions are built with the
-        batch's JVM mixer + k affine maps on both sides (fixed m)."""
-        from real___time_fraud_detection_using_apache_kafka_spark.plans.queries_sketch import (
-            _BLOOM_KS, _MIX_P, _mixed_hash,
-        )
-        from real___time_fraud_detection_using_apache_kafka_spark.sources.tables import load_table
-        from real___time_fraud_detection_using_apache_kafka_spark.streaming.stateful import (
-            bloom_filter_stream,
-        )
-
-        m = 4096
-
-        def words_of(df):
-            keyed = _mixed_hash(
-                df.filter(F.col("user_id").isNotNull()).select(
-                    "event_id", "user_id"
-                ),
-                "cast(user_id as string)",
-            )
-            bits = keyed.select(
-                "event_id",
-                F.explode(
-                    F.array(
-                        *[
-                            F.pmod(
-                                F.pmod(
-                                    F.lit(a) * F.col("g") + F.lit(b),
-                                    F.lit(_MIX_P),
-                                ),
-                                F.lit(m),
-                            )
-                            for a, b in _BLOOM_KS
-                        ]
-                    )
-                ).alias("bit"),
-            )
-            return bits.select(
-                "event_id",
-                (F.col("bit") / 64).cast("int").alias("w"),
-                F.expr(
-                    "shiftleft(cast(1 as bigint), cast(bit % 64 as int))"
-                ).alias("word"),
-            )
-
-        e = load_table(spark, sf_dir, "events")
-        batch_mask = {
-            r.w: r.word
-            for r in words_of(e)
-            .groupBy("w")
-            .agg(F.expr("bit_or(word)").alias("word"))
-            .collect()
-        }
-
-        src, ckpt = f"{tmp_path}/src", f"{tmp_path}/ckpt"
-        write_batch = _atomic_batch_writer(tmp_path, src)
-        write_batch(words_of(e.filter(F.col("event_id") % 2 == 0)))
-        stream = (
-            spark.readStream.schema("v string").text(src)
-            .select(
-                F.from_json(
-                    F.col("v"), "event_id long, w int, word long"
-                ).alias("e")
-            )
-            .select("e.*")
-        )
-        q = (
-            bloom_filter_stream(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("bloom_t")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            write_batch(words_of(e.filter(F.col("event_id") % 2 == 1)))
-            q.processAllAvailable()
-            rows = spark.sql(
-                "SELECT w, word FROM ("
-                " SELECT *, row_number() OVER ("
-                "   PARTITION BY w ORDER BY bit_count(word) DESC) rk"
-                " FROM bloom_t) WHERE rk = 1"
-            ).collect()
-        finally:
-            q.stop()
-        stream_mask = {r.w: r.word for r in rows}
-        assert stream_mask == batch_mask and len(batch_mask) > 0
-
-
-class TestGridCellsStreamParity:
-    def test_grid_cells_merge_to_exact_batch_table(
-        self, spark, sf_dir, tmp_path
-    ):
-        """Grid-quantile cells merge by cell-wise sum — the streamed
-        (event_type, bucket) count table must EQUAL the batch
-        aggregate (pure integers) under parity-sharded micro-batches;
-        buckets built with the same JVM floor(value / W) on both
-        sides.  Completes the sketch-dual monoid family."""
-        from real___time_fraud_detection_using_apache_kafka_spark.plans.queries_sketch import (
-            GRID_QUANTILE_W,
-        )
-        from real___time_fraud_detection_using_apache_kafka_spark.sources.tables import (
-            load_table,
-        )
-        from real___time_fraud_detection_using_apache_kafka_spark.streaming.stateful import (
-            grid_cells_stream,
-        )
-
-        def cells_of(df):
-            return df.filter(F.col("value").isNotNull()).select(
-                "event_id",
-                F.coalesce(F.col("event_type"), F.lit("(null)"))
-                .alias("event_type"),
-                F.floor(F.col("value") / F.lit(GRID_QUANTILE_W))
-                .cast("long")
-                .alias("b"),
-            )
-
-        e = load_table(spark, sf_dir, "events")
-        batch_cells = {
-            (r.event_type, r.b): r.c
-            for r in cells_of(e)
-            .groupBy("event_type", "b")
-            .agg(F.count("*").alias("c"))
-            .collect()
-        }
-
-        src, ckpt = f"{tmp_path}/src", f"{tmp_path}/ckpt"
-        write_batch = _atomic_batch_writer(tmp_path, src)
-        write_batch(cells_of(e.filter(F.col("event_id") % 2 == 0)))
-        stream = (
-            spark.readStream.schema("v string").text(src)
-            .select(
-                F.from_json(
-                    F.col("v"), "event_id long, event_type string, b long"
-                ).alias("e")
-            )
-            .select("e.*")
-        )
-        q = (
-            grid_cells_stream(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("grid_t")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            write_batch(cells_of(e.filter(F.col("event_id") % 2 == 1)))
-            q.processAllAvailable()
-            rows = spark.sql(
-                "SELECT event_type, b, cnt FROM ("
-                " SELECT *, row_number() OVER ("
-                "   PARTITION BY event_type, b ORDER BY cnt DESC) rk"
-                " FROM grid_t) WHERE rk = 1"
-            ).collect()
-        finally:
-            q.stop()
-        stream_cells = {(r.event_type, r.b): r.cnt for r in rows}
-        assert stream_cells == batch_cells
-
-
-class TestSpaceSavingStreamParity:
-    def test_exact_when_vocab_fits_counters(self, spark, sf_dir, tmp_path):
-        """With per-shard distinct vocabulary <= k the Space-Saving
-        summary degrades to EXACT counts (no eviction ever fires), so
-        the streamed summary must equal the batch groupBy count
-        integer-for-integer under micro-batch sharding."""
-        from real___time_fraud_detection_using_apache_kafka_spark.sources.tables import (
-            load_table,
-        )
-        from real___time_fraud_detection_using_apache_kafka_spark.streaming.stateful import (
-            spacesaving_topk_stream,
-        )
-
-        def tokens_of(df):
-            return df.filter(F.col("event_type").isNotNull()).select(
-                "event_id",
-                F.pmod(F.xxhash64("event_type"), F.lit(4))
-                .cast("int")
-                .alias("shard"),
-                F.col("event_type").alias("token"),
-            )
-
-        e = load_table(spark, sf_dir, "events")
-        batch_counts = {
-            (r.shard, r.token): r.c
-            for r in tokens_of(e)
-            .groupBy("shard", "token")
-            .agg(F.count("*").alias("c"))
-            .collect()
-        }
-
-        src, ckpt = f"{tmp_path}/src", f"{tmp_path}/ckpt"
-        write_batch = _atomic_batch_writer(tmp_path, src)
-        write_batch(tokens_of(e.filter(F.col("event_id") % 2 == 0)))
-        stream = (
-            spark.readStream.schema("v string").text(src)
-            .select(
-                F.from_json(
-                    F.col("v"), "event_id long, shard int, token string"
-                ).alias("e")
-            )
-            .select("e.*")
-        )
-        q = (
-            spacesaving_topk_stream(stream, k=32)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("ss_t")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            write_batch(tokens_of(e.filter(F.col("event_id") % 2 == 1)))
-            q.processAllAvailable()
-            rows = spark.sql(
-                "SELECT shard, token, cnt, err FROM ("
-                " SELECT *, max(ver) OVER (PARTITION BY shard) mv"
-                " FROM ss_t) WHERE ver = mv"
-            ).collect()
-        finally:
-            q.stop()
-        stream_counts = {(r.shard, r.token): r.cnt for r in rows}
-        assert stream_counts == batch_counts and len(batch_counts) > 0
-        assert all(r.err == 0 for r in rows)
-
-    def test_guarantee_bounds_under_eviction(self, spark, tmp_path):
-        """Overflowed summary (unique-token tail >> k): every surviving
-        token obeys cnt - err <= true <= cnt, and every planted token
-        with frequency > n_seen_shard/k survives (the Space-Saving
-        guarantee)."""
-        from real___time_fraud_detection_using_apache_kafka_spark.streaming.stateful import (
-            spacesaving_topk_stream,
-        )
-
-        K, P = 8, 2
-        # 3 planted heavy hitters (60 each) over a 200-unique-token tail
-        heavy = [(f"hh_{i}", 60) for i in range(3)]
-        rows = [(j, t) for j, (t, c) in enumerate(heavy) for _ in range(c)]
-        rows += [(1000 + j, f"tail_{j}") for j in range(200)]
-        df = spark.createDataFrame(
-            [(i, *r) for i, r in enumerate(rows)], "rid long, gid long, token string"
-        ).select(
-            "rid",
-            F.pmod(F.xxhash64("token"), F.lit(P)).cast("int").alias("shard"),
-            "token",
-        )
-        true_counts = {
-            (r.shard, r.token): r.c
-            for r in df.groupBy("shard", "token").agg(F.count("*").alias("c")).collect()
-        }
-        n_per_shard = {}
-        for (s, _), c in true_counts.items():
-            n_per_shard[s] = n_per_shard.get(s, 0) + c
-
-        src, ckpt = f"{tmp_path}/src", f"{tmp_path}/ckpt"
-        write_batch = _atomic_batch_writer(tmp_path, src)
-        write_batch(df.filter(F.col("rid") % 2 == 0))
-        stream = (
-            spark.readStream.schema("v string").text(src)
-            .select(
-                F.from_json(
-                    F.col("v"), "rid long, shard int, token string"
-                ).alias("e")
-            )
-            .select("e.*")
-        )
-        q = (
-            spacesaving_topk_stream(stream, k=K)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("ss_g")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            write_batch(df.filter(F.col("rid") % 2 == 1))
-            q.processAllAvailable()
-            out = spark.sql(
-                "SELECT shard, token, cnt, err, ver FROM ("
-                " SELECT *, max(ver) OVER (PARTITION BY shard) mv"
-                " FROM ss_g) WHERE ver = mv"
-            ).collect()
-        finally:
-            q.stop()
-        survivors = {(r.shard, r.token): (r.cnt, r.err) for r in out}
-        # state is capped at k entries per shard
-        per_shard = {}
-        for (s, _t) in survivors:
-            per_shard[s] = per_shard.get(s, 0) + 1
-        assert all(v <= K for v in per_shard.values())
-        # ver column carries the per-shard processed count
-        vers = {r.shard: r.ver for r in out}
-        assert vers == n_per_shard
-        # overestimation-bound invariant for every survivor
-        for key, (cnt, err) in survivors.items():
-            true = true_counts.get(key, 0)
-            assert cnt - err <= true <= cnt, (key, cnt, err, true)
-        # guarantee: planted tokens above the n/k threshold survive
-        for (s, t), true in true_counts.items():
-            if t.startswith("hh_") and true > n_per_shard[s] / K:
-                assert (s, t) in survivors, (s, t, true)
-
-
-class TestSpaceSavingContainmentSink:
-    """r11 (VERDICT r10 item 7): the foreachBatch containment-audit
-    twin of the batch ``heavy_hitter_containment`` audit — the sketch's
-    published bound is CHECKED against exact counts on a replayed
-    fixture, per micro-batch, through the first-class sink."""
-
-    def _fixture(self, spark, P):
-        heavy = [(f"hh_{i}", 40) for i in range(4)]
-        rows = [(t,) for t, c in heavy for _ in range(c)]
-        rows += [(f"tail_{j}",) for j in range(150)]
-        return spark.createDataFrame(
-            [(i, t) for i, (t,) in enumerate(rows)], "rid long, token string"
-        ).select(
-            "rid",
-            F.pmod(F.xxhash64("token"), F.lit(P)).cast("int").alias("shard"),
-            "token",
-        )
-
-    def test_audit_green_on_replayed_fixture(self, spark, tmp_path):
-        from real___time_fraud_detection_using_apache_kafka_spark.streaming.stateful import (
-            spacesaving_containment_sink,
-            spacesaving_topk_stream,
-        )
-
-        K, P = 8, 2
-        df = self._fixture(spark, P)
-
-        src, ckpt = f"{tmp_path}/src", f"{tmp_path}/ckpt"
-        write_batch = _atomic_batch_writer(tmp_path, src)
-
-        # truth over the REPLAYED PREFIX: exact counts of everything
-        # written so far (grows with each appended batch, like the
-        # archived log the audit would read at 100 TB)
-        def truth_fn(sess):
-            return (
-                sess.read.schema("v string").text(src)
-                .select(
-                    F.from_json(
-                        F.col("v"), "rid long, shard int, token string"
-                    ).alias("e")
-                )
-                .select("e.*")
-                .groupBy("shard", "token")
-                .agg(F.count("*").alias("true_cnt"))
-            )
-
-        write_batch(df.filter(F.col("rid") % 2 == 0))
-        stream = (
-            spark.readStream.schema("v string").text(src)
-            .select(
-                F.from_json(
-                    F.col("v"), "rid long, shard int, token string"
-                ).alias("e")
-            )
-            .select("e.*")
-        )
-        results: dict = {}
-        q = spacesaving_containment_sink(
-            spacesaving_topk_stream(stream, k=K), truth_fn, K, results,
-            checkpoint=ckpt,
-        ).start()
-        try:
-            q.processAllAvailable()
-            write_batch(df.filter(F.col("rid") % 2 == 1))
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        assert results["batches"] >= 2
-        assert results["checked"] > 0
-        assert results["violations"] == [], results["violations"]
-
-    def test_audit_catches_broken_summary(self, spark):
-        """The audit must be falsifiable: a summary that understates its
-        error (cnt inflated past true with err=0) trips 'bound', a
-        fabricated token trips 'phantom', and a missing heavy hitter
-        trips 'guarantee'."""
-        from real___time_fraud_detection_using_apache_kafka_spark.streaming.stateful import (
-            audit_spacesaving_summary,
-        )
-
-        truth = spark.createDataFrame(
-            [(0, "a", 100), (0, "b", 60), (0, "c", 2)],
-            "shard int, token string, true_cnt long",
-        )
-        # n_seen=162, k=2 -> threshold 81: 'a' (100) is guaranteed.
-        summary = spark.createDataFrame(
-            [
-                (0, "b", 70, 0, 162),   # bound: true 60 < cnt-err 70
-                (0, "ghost", 5, 0, 162),  # phantom: absent from truth
-            ],
-            "shard int, token string, cnt long, err long, ver long",
-        )
-        out = audit_spacesaving_summary(summary, truth, k=2).collect()
-        kinds = {(r.violation, r.token) for r in out}
-        assert kinds == {
-            ("bound", "b"), ("phantom", "ghost"), ("guarantee", "a"),
-        }, kinds

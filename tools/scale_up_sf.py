@@ -95,7 +95,9 @@ def scale_table(src: str, dst: str, name: str, k: int) -> None:
                 dtype=object,
             )
             new["text"] = texts
-            new["n_chars"] = np.array([len(s) for s in texts], dtype=np.int64)
+            new["n_chars"] = np.array(
+                [len(s) if s else 0 for s in texts], dtype=np.int64
+            )
         if name == "embeddings" and c > 0:
             emb = np.stack(
                 [np.asarray(v, dtype=np.float32) for v in cols["embedding"]]
